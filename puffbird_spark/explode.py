@@ -207,16 +207,6 @@ class FusionUnsupported(PuffbirdSparkError):
     engine falls back to the join strategy under ``strategy='auto'``."""
 
 
-def _advance_type(dtype: T.DataType) -> T.DataType:
-    if isinstance(dtype, T.ArrayType):
-        return dtype.elementType
-    if isinstance(dtype, T.MapType):
-        return dtype.valueType
-    if isinstance(dtype, T.StructType):
-        return _struct_common_type(dtype)
-    return dtype
-
-
 def fused_axes_supported(
     df: DataFrame,
     cols: list[str],

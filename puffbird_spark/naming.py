@@ -92,13 +92,6 @@ def sanitize_identifier(label: object) -> str:
     return result
 
 
-def stringify_column(label: object) -> str:
-    """Column names must be strings (reference frame.py:1240-1325)."""
-    if isinstance(label, tuple):
-        return "_".join(str(part) for part in label)
-    return str(label)
-
-
 def level_column(datacol: str, depth: int, shared_axes: dict[int, str] | None = None) -> str:
     """Name for the level column emitted at ``depth`` while exploding
     ``datacol``: the shared-axis name if declared for this depth, else

@@ -1,35 +1,139 @@
-"""Connected components over candidate-pair edges — the cluster-resolution
-stage of a fuzzy-dedup pipeline (MinHash/SimHash pairs in, one canonical
-cluster id per document out).
+"""Graph operators over Spark edge lists: connected components and dedup
+cluster resolution, PageRank, label propagation, HITS, k-core peeling,
+BFS and weighted shortest paths, triangle and link-prediction scores, and
+the bipartite-projection, random-walk and assortativity builders.
 
-Algorithm: iterative min-label propagation. Every vertex starts labeled
-with itself; each round a vertex takes the minimum of its own label and its
-neighbors' labels; at fixpoint the label is the component's minimum vertex
-id. Rounds needed = graph diameter (duplicate clusters are near-cliques, so
-2-3 rounds in practice; ``max_iter`` bounds pathological chains).
+Every iterative operator runs its rounds through :func:`_iterate`, which
+holds the family's one rule:
 
-Scale design:
-- each round is ONE join (edges ⋈ labels, both keyed) + one groupBy min —
-  no all-pairs step, partitioning stable on the vertex key across rounds;
-- ``localCheckpoint`` after every round truncates the lineage — without it
-  the plan doubles per iteration and the job dies on planning time long
+- each round's state is checkpointed (``localCheckpoint``) — without it
+  the plan doubles per round and the job dies on planning time long
   before data size matters;
-- convergence is detected with a count of changed labels (one cheap action
-  per round on the already-materialized checkpoint).
+- the previous round's checkpoints are released once the next round's
+  are materialized, and when the loop ends every checkpoint the operator
+  made is released except the one its result reads;
+- a fixpoint operator (connected components) checkpoints lazily, so the
+  count of changed rows that decides convergence is the job that
+  materializes the round, and it warns when its round budget runs out
+  instead of returning an unconverged result.
 
-Each round ends with a path-halving shortcut (relabel through the label
-table itself: ``comp ← label(comp)``), so convergence is O(log diameter)
-rather than O(diameter) — 20 rounds cover any graph a dedup pipeline can
-produce. If the budget is still exhausted without a fixpoint the operator
-warns instead of returning silently split components (ADVICE r2).
+Edge lists are prepared by three shared recipes: :func:`_undirected`
+(both orientations, self-loops dropped, distinct), :func:`_canonical`
+(one ``least``/``greatest`` row per edge, distinct) and :func:`_directed`
+(distinct directed edges plus their vertex table).
 """
 
 from __future__ import annotations
 
+import math
 import warnings
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _release(*frames: DataFrame) -> None:
+    """Unpersist, without blocking, the checkpoint under each frame: the
+    ``LogicalRDD`` at the root of its analyzed plan. Only for checkpoints
+    the operator made itself and its result no longer reads: reading a
+    released frame fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``,
+    while a checkpoint already built from it still reads."""
+    for df in frames:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _iterate(
+    state: DataFrame | tuple[DataFrame, ...],
+    step: Callable,
+    rounds: int,
+    pinned: tuple[DataFrame, ...] = (),
+    changed: Callable[[DataFrame], DataFrame] | None = None,
+    name: str = "",
+) -> DataFrame:
+    """Run ``state = step(state, i, ckpt)`` for ``i`` in ``range(rounds)``
+    and return the first frame of the final state (the state itself when
+    it is a single frame).
+
+    ``step`` passes every frame it wants materialized through ``ckpt``,
+    which checkpoints it eagerly. With ``changed`` — the new state's
+    changed rows — the loop is a fixpoint: checkpoints are lazy, the
+    changed-row count materializes them in the same job, the loop stops
+    at zero and warns if ``rounds`` run out first. ``pinned`` are the
+    operator's own set-up checkpoints that the rounds read; they are
+    released with the last round's checkpoints, except the returned
+    frame."""
+    made: list[DataFrame] = []
+
+    def ckpt(df: DataFrame) -> DataFrame:
+        made.append(df.localCheckpoint(eager=changed is None))
+        return made[-1]
+
+    n_changed = 0
+    for i in range(rounds):
+        done = len(made)
+        state = step(state, i, ckpt)
+        if changed is not None:
+            n_changed = changed(state).count()
+        _release(*made[:done])
+        del made[:done]
+        if changed is not None and n_changed == 0:
+            break
+    if n_changed:
+        warnings.warn(
+            f"{name}: no fixpoint after max_iter={rounds} rounds — the "
+            "result has not converged; raise max_iter",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    result = state[0] if isinstance(state, tuple) else state
+    _release(*(f for f in (*pinned, *made) if f is not result))
+    return result
+
+
+def _undirected(
+    edges: DataFrame, src: str, dst: str, checkpoint: bool = True
+) -> DataFrame:
+    """Both orientations ``(a, b)`` of every edge, self-loops dropped,
+    distinct."""
+    und = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    return und.localCheckpoint(eager=True) if checkpoint else und
+
+
+def _canonical(
+    edges: DataFrame, src: str, dst: str, checkpoint: bool = True
+) -> DataFrame:
+    """Every undirected edge once, as ``(a, b)`` with ``a < b``."""
+    und = (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    return und.localCheckpoint(eager=True) if checkpoint else und
+
+
+def _directed(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame]:
+    """Distinct directed edges ``(src, dst)`` and their endpoints
+    ``(vertex)``, both checkpointed."""
+    e = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst")
+    ).distinct().localCheckpoint(eager=True)
+    verts = (
+        e.select(F.col("src").alias("vertex"))
+        .union(e.select(F.col("dst").alias("vertex")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return e, verts
 
 
 def connected_components(
@@ -37,21 +141,23 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    assume_distinct: bool = False,
-    stats: dict | None = None,
 ) -> DataFrame:
-    """Resolve undirected edges into components.
+    """Resolve undirected edges into components — the cluster-resolution
+    stage of a fuzzy-dedup pipeline (MinHash/SimHash pairs in, one
+    canonical cluster id per document out).
 
     Returns (vertex, component) where ``component`` is the minimum vertex
     id reachable from ``vertex``. Only vertices that appear in an edge are
     returned (isolated docs are their own cluster by definition — join
     back with a coalesce if the full corpus mapping is needed).
 
-    ``assume_distinct``: skip the edge-dedup shuffle when the caller
-    guarantees unique (src, dst) pairs with src != dst — true for LSH
-    candidate pairs, which end in ``dropDuplicates`` with ``id_a < id_b``.
-    Duplicate edges would not corrupt results (min is idempotent), only
-    inflate the per-round join, so this is a pure optimization knob.
+    Iterative min-label propagation: each round a vertex takes the
+    minimum of its own label and its neighbors' labels (ONE join + one
+    groupBy min, keyed on the vertex), then a path-halving shortcut
+    relabels through the label table itself (``comp ← label(comp)``), so
+    convergence is O(log diameter) rather than O(diameter) — 20 rounds
+    cover any graph a dedup pipeline can produce. Duplicate edges and
+    both orientations are fine as input: min is idempotent.
     """
     # both directions via ONE explode, not a self-union: a union's two
     # branches each re-evaluate the whole upstream pipeline (for LSH
@@ -65,10 +171,7 @@ def connected_components(
                 F.struct(F.col(dst).alias("s"), F.col(src).alias("d")),
             )
         ).alias("__e")
-    ).select("__e.s", "__e.d")
-    if not assume_distinct:
-        edges = edges.distinct()
-    edges = edges.localCheckpoint(eager=True)
+    ).select("__e.s", "__e.d").localCheckpoint(eager=True)
     # round-0 fold (r14, guide §2.4): starting from identity labels,
     # the loop's first round reduces to comp = min(v, min of DIRECT
     # neighbors) — so compute that directly as ONE keyed aggregation
@@ -87,13 +190,9 @@ def connected_components(
         .select(F.col("s").alias("v"), "comp")
         .localCheckpoint(eager=True)
     )
-    if stats is not None:
-        stats["edges"] = edges.count()
-        stats["rounds"] = 0
-    changed = 0
-    for _ in range(max_iter):
-        if stats is not None:
-            stats["rounds"] += 1
+
+    def step(labels: DataFrame, _: int, ckpt) -> DataFrame:
+        labels = labels.drop("__old")
         neighbor_min = (
             edges.join(labels, edges.d == labels.v)
             .groupBy("s")
@@ -114,150 +213,21 @@ def connected_components(
         relabel = propagated.select(
             F.col("v").alias("__cv"), F.col("comp").alias("__cc")
         )
-        new_labels = (
+        return ckpt(
             propagated.join(relabel, propagated.comp == relabel.__cv, "left")
             .select(
                 "v",
                 "__old",
                 F.coalesce(F.col("__cc"), F.col("comp")).alias("comp"),
             )
-            .localCheckpoint(eager=False)
         )
-        # labels only decrease, so "comp < __old" IS the change set.
-        # LAZY checkpoint + full count: the count computes every
-        # partition of the marked RDD, so ONE job materializes the
-        # round's labels (persisting blocks + truncating lineage,
-        # exactly like the eager form) AND returns the convergence
-        # signal — the r13 shape paid a checkpoint job plus a separate
-        # count job per round (guide §1.2: at bench SF the iterative
-        # operators are driver-job-bound, not data-bound).
-        changed = new_labels.filter(
-            F.col("comp") < F.col("__old")).count()
-        labels = new_labels.drop("__old")
-        if changed == 0:
-            break
-    if changed != 0:
-        warnings.warn(
-            f"connected_components: no fixpoint after max_iter={max_iter} "
-            "rounds — labels may split one component into several; raise "
-            "max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+
+    # labels only decrease, so "comp < __old" IS the change set
+    labels = _iterate(
+        labels, step, max_iter, pinned=(edges, labels),
+        changed=lambda s: s.filter(F.col("comp") < F.col("__old")),
+        name="connected_components")
     return labels.select(F.col("v").alias("vertex"), F.col("comp").alias("component"))
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm; no equivalent in the reference, which has no graph surface).
-
-    Per round, every vertex u with neighborhood Γ(u) and
-    ``m = min(Γ(u) ∪ {u})``:
-
-    - large-star: re-attach every STRICTLY LARGER neighbor to m —
-      edges {(v, m) : v ∈ Γ(u), v > u};
-    - small-star: re-attach every smaller-or-equal neighbor and u itself
-      to m — edges {(v, m) : v ∈ Γ(u), v ≤ u} ∪ {(u, m)}.
-
-    Both operations preserve connectivity and never increase the edge
-    count; at fixpoint the edge set is a star forest (v, component-min).
-    The draw over min-label propagation: the EDGE LIST ITSELF CONTRACTS
-    each round — a k-clique collapses toward k-1 star edges after one
-    alternation — so later rounds join shrinking inputs, where min-label
-    re-joins the full original edge list every round. On the near-clique
-    graphs dedup actually produces that is the dominant cost term.
-    Fixpoint test is edge-set stability (one anti-join on the contracted
-    list per round). Differentially tested bit-equal to
-    :func:`connected_components` (tests/test_operators.py)."""
-    edges = pairs.select(
-        F.least(F.col(src), F.col(dst)).alias("a"),
-        F.greatest(F.col(src), F.col(dst)).alias("b"),
-    ).filter(F.col("a") != F.col("b")).distinct().localCheckpoint(eager=True)
-    vertices = (
-        edges.select(F.explode(F.array("a", "b")).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def star_pass(e: DataFrame, large: bool) -> DataFrame:
-        adj = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("u"), F.col("b").alias("w")),
-                    F.struct(F.col("b").alias("u"), F.col("a").alias("w")),
-                )
-            ).alias("__e")
-        ).select("__e.u", "__e.w")
-        mins = adj.groupBy("u").agg(F.min("w").alias("__mn")).select(
-            "u", F.least(F.col("__mn"), F.col("u")).alias("m"))
-        j = adj.join(mins, "u")
-        if large:
-            out = j.filter(F.col("w") > F.col("u")).select(
-                F.col("w").alias("x"), F.col("m").alias("y"))
-        else:
-            out = j.filter(F.col("w") <= F.col("u")).select(
-                F.col("w").alias("x"), F.col("m").alias("y")
-            ).unionByName(
-                mins.select(F.col("u").alias("x"), F.col("m").alias("y"))
-            )
-        return (
-            out.filter(F.col("x") != F.col("y"))
-            .select(
-                F.least(F.col("x"), F.col("y")).alias("a"),
-                F.greatest(F.col("x"), F.col("y")).alias("b"),
-            )
-            .distinct()
-        )
-
-    if stats is not None:
-        stats["edges"] = edges.count()
-        stats["rounds"] = 0
-        stats["edges_per_round"] = []
-    converged = False
-    for _ in range(max_iter):
-        new_edges = star_pass(star_pass(edges, large=True), large=False)
-        new_edges = new_edges.localCheckpoint(eager=True)
-        if stats is not None:
-            stats["rounds"] += 1
-            stats["edges_per_round"].append(new_edges.count())
-        grew = new_edges.join(
-            edges, ["a", "b"], "left_anti").limit(1).count()
-        shrank = edges.join(
-            new_edges, ["a", "b"], "left_anti").limit(1).count()
-        edges = new_edges
-        if grew == 0 and shrank == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"connected_components_star: no fixpoint after max_iter="
-            f"{max_iter} rounds — labels may split one component into "
-            "several; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # star forest: every edge is (component-min a, member b); vertices
-    # absent from the b side are component minima labeling themselves.
-    # The groupBy-min keeps the output one-row-per-vertex even when the
-    # budget was exhausted mid-contraction (a non-fixpoint edge set can
-    # hold two (smaller, b) edges for one b — without the fold the
-    # vertex would surface twice with conflicting labels).
-    member = (
-        edges.select(F.col("b").alias("vertex"), F.col("a").alias("component"))
-        .groupBy("vertex")
-        .agg(F.min("component").alias("component"))
-    )
-    roots = vertices.join(
-        edges.select(F.col("b").alias("v")), "v", "left_anti"
-    ).select(F.col("v").alias("vertex"), F.col("v").alias("component"))
-    return member.unionByName(roots)
 
 
 def dedup_clusters(
@@ -265,29 +235,12 @@ def dedup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Candidate pairs → (doc_id, cluster_id, is_canonical): the keep/drop
     decision of a fuzzy-dedup pipeline. ``cluster_id`` is the minimum
-    doc id in the component; that doc is the canonical survivor.
-
-    LSH candidate pairs are unique with id_a < id_b by construction
-    (``minhash_candidate_pairs`` ends in dropDuplicates), so the CC edge
-    list skips its dedup shuffle.
-
-    ``algorithm``: ``minlabel`` (default — fewest Spark jobs per round,
-    wins on the shallow near-clique graphs dedup produces at gate SF) or
-    ``star`` (edge-contracting alternation — the round-count/edge-volume
-    numbers for both are in NOTES.md round 5; star's contraction pays off
-    as cluster sizes and diameters grow). Both produce identical output
-    under differential test."""
-    if algorithm == "star":
-        comp = connected_components_star(pairs, id_a, id_b, max_iter)
-    elif algorithm == "minlabel":
-        comp = connected_components(pairs, id_a, id_b, max_iter,
-                                    assume_distinct=True)
-    else:
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
+    doc id in the component (:func:`connected_components`); that doc is
+    the canonical survivor."""
+    comp = connected_components(pairs, id_a, id_b, max_iter)
     return comp.select(
         F.col("vertex").alias("doc_id"),
         F.col("component").alias("cluster_id"),
@@ -346,12 +299,11 @@ def incremental_components(
             F.greatest("__ra", "__rb").alias("id_b"))
         .distinct()
     )
-    roots = connected_components(
-        contracted, "id_a", "id_b", max_iter, assume_distinct=True
-    ).select(F.col("vertex").alias("__l"), F.col("component").alias("__r"))
     # the roots table is label-count-sized (only components being merged
-    # this batch); both relabel joins consume it — materialize once
-    roots = roots.localCheckpoint(eager=True)
+    # this batch) and already materialized by the CC checkpoint, which
+    # both relabel joins read
+    roots = connected_components(contracted, "id_a", "id_b", max_iter).select(
+        F.col("vertex").alias("__l"), F.col("component").alias("__r"))
     updated = (
         state.join(roots, state["component"] == F.col("__l"), "left")
         .select(
@@ -449,24 +401,14 @@ def pagerank(
     Scale shape: per round ONE join (contributions = ranks ⋈ edges on
     the source key) + one groupBy sum on the target key — partitioning
     alternates between the two vertex keys, nothing is ever all-pairs;
-    the dangling total and N ride one-row broadcast cross joins;
-    ``localCheckpoint`` per round truncates the lineage (the
-    connected-components lesson — planning time, not data, kills
-    un-checkpointed iteration). Returns ``(vertex, rank)``.
+    the dangling total and N ride one-row broadcast cross joins.
+    Returns ``(vertex, rank)``.
     """
     if n_iter <= 0:
         raise ValueError("n_iter must be positive")
     if not (0.0 < damping < 1.0):
         raise ValueError("damping must be in (0, 1)")
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .union(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, verts = _directed(edges, src, dst)
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # vertex table carries outdeg once (0 = dangling). The r13 shape
     # materialized base, then base+tel, then base+rank as THREE
@@ -501,7 +443,6 @@ def pagerank(
     base = base.select(
         "vertex", "outdeg", "tel", F.round("tel", dp).alias("rank")
     ).localCheckpoint(eager=True)
-    ranks = base
     # Order-free sums via 1e12-scaled LONG arithmetic (ADVICE r8 #4):
     # each term snaps to the nearest integer multiple of 1e-12 BEFORE the
     # keyed sum, so addition is exact integer math — partial-agg-order
@@ -512,7 +453,8 @@ def pagerank(
     # bounded by the TOTAL rank mass ≈ 1, i.e. ≤ ~1e12 after scaling,
     # independent of graph size.
     scale = F.lit(float(10 ** 12))
-    for _ in range(n_iter):
+
+    def step(ranks: DataFrame, _: int, ckpt) -> DataFrame:
         dangling = (
             ranks.filter(F.col("outdeg") == 0)
             .agg((F.coalesce(
@@ -529,7 +471,7 @@ def pagerank(
             .groupBy("vertex")
             .agg((F.sum("c") / scale).alias("inflow"))
         )
-        ranks = (
+        return ckpt(
             base.join(contrib, "vertex", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -539,8 +481,9 @@ def pagerank(
                     + damping * (F.coalesce("inflow", F.lit(0.0))
                                  + F.col("dangling") * F.col("tel")),
                     dp).alias("rank"))
-            .localCheckpoint(eager=True)
         )
+
+    ranks = _iterate(base, step, n_iter, pinned=(e, verts, base))
     return ranks.select("vertex", "rank")
 
 
@@ -566,31 +509,22 @@ def label_propagation(
     Scale shape: edges symmetrize once (distinct, checkpointed); each
     round is one labels ⋈ edges join + one (vertex, label) count + one
     per-vertex top-1 window — all keyed on vertex ids, nothing
-    all-pairs; ``localCheckpoint`` per round truncates lineage (the
-    iterative-operator rule). Fixed ``n_iter`` rounds: synchronous LPA
+    all-pairs. Fixed ``n_iter`` rounds: synchronous LPA
     can oscillate on bipartite structures, so callers pick the round
     budget and read the labels as "communities after k rounds" —
     deterministic, not a fixpoint claim. Returns ``(vertex, label)``.
     """
-    from pyspark.sql.window import Window
-
     if n_iter <= 0:
         raise ValueError("n_iter must be positive")
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst)
     verts = (
         und.select(F.col("a").alias("vertex")).distinct()
         .localCheckpoint(eager=True)
     )
-    labels = verts.select("vertex", F.col("vertex").alias("label"))
     w = Window.partitionBy("vertex").orderBy(
         F.desc("n"), F.asc("label"))
-    for _ in range(n_iter):
+
+    def step(labels: DataFrame, _: int, ckpt) -> DataFrame:
         neigh = (
             und.join(labels, und.b == labels.vertex)
             .select(F.col("a").alias("vertex"), "label")
@@ -600,13 +534,14 @@ def label_propagation(
             .filter(F.col("__rn") == 1)
             .select("vertex", F.col("label").alias("__new"))
         )
-        labels = (
+        return ckpt(
             labels.join(neigh, "vertex", "left")
             .select("vertex",
                     F.coalesce("__new", "label").alias("label"))
-            .localCheckpoint(eager=True)
         )
-    return labels
+
+    labels = verts.select("vertex", F.col("vertex").alias("label"))
+    return _iterate(labels, step, n_iter, pinned=(und, verts))
 
 
 def hits(
@@ -635,19 +570,11 @@ def hits(
 
     Scale shape: two keyed join+sum passes per round (alternating
     partitioning between the two vertex keys), the two normalizers
-    ride one-row broadcast cross joins, ``localCheckpoint`` per round
-    truncates lineage. Nothing all-pairs, nothing collected."""
+    ride one-row broadcast cross joins. Nothing all-pairs, nothing
+    collected."""
     if n_iter <= 0:
         raise ValueError("n_iter must be positive")
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .union(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, verts = _directed(edges, src, dst)
     n = verts.agg(F.count(F.lit(1)).alias("n"))
     scores = (
         verts.crossJoin(F.broadcast(n))
@@ -656,50 +583,36 @@ def hits(
                 F.round(F.lit(1.0) / F.col("n"), dp).alias("auth"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(n_iter):
+    dec = "decimal(18,12)"
+
+    def half(s: DataFrame, keep: str, out: str, frm: str, to: str):
+        """Recompute score ``out`` from ``keep`` along the edges
+        ``frm → to``, normalized to sum one."""
         # 12-dp decimal snap before every order-free sum (the pagerank
         # portability rule, ADVICE r8 #4): the summed scores are 9-dp
         # rounded doubles, so the snap is exact and the sums engine-free
-        a_raw = (
-            scores.join(e, scores.vertex == e.src)
-            .groupBy("dst").agg(
-                F.sum(F.col("hub").cast("decimal(18,12)")).alias("ar"))
-            .select(F.col("dst").alias("vertex"), "ar")
+        raw = (
+            s.join(e, s.vertex == e[frm])
+            .groupBy(to).agg(F.sum(F.col(keep).cast(dec)).alias("__r"))
+            .select(F.col(to).alias("vertex"), "__r")
         )
-        a_tot = a_raw.agg(F.sum("ar").alias("at"))
-        dec0 = F.lit(0).cast("decimal(18,12)")
-        auth = (
-            scores.select("vertex", "hub")
-            .join(a_raw, "vertex", "left")
-            .crossJoin(F.broadcast(a_tot))
-            .select(
-                "vertex", "hub",
-                F.round(
-                    F.coalesce(F.col("ar"), dec0).cast("double")
-                    / F.col("at").cast("double"), dp
-                ).alias("auth"))
-            .localCheckpoint(eager=True)
+        tot = raw.agg(F.sum("__r").alias("__t"))
+        new = F.round(
+            F.coalesce(F.col("__r"), F.lit(0).cast(dec)).cast("double")
+            / F.col("__t").cast("double"), dp
+        ).alias(out)
+        return (
+            s.select("vertex", keep)
+            .join(raw, "vertex", "left")
+            .crossJoin(F.broadcast(tot))
+            .select("vertex", *((new, keep) if out == "hub" else (keep, new)))
         )
-        h_raw = (
-            auth.join(e, auth.vertex == e.dst)
-            .groupBy("src").agg(
-                F.sum(F.col("auth").cast("decimal(18,12)")).alias("hr"))
-            .select(F.col("src").alias("vertex"), "hr")
-        )
-        h_tot = h_raw.agg(F.sum("hr").alias("ht"))
-        scores = (
-            auth.select("vertex", "auth")
-            .join(h_raw, "vertex", "left")
-            .crossJoin(F.broadcast(h_tot))
-            .select(
-                "vertex",
-                F.round(
-                    F.coalesce(F.col("hr"), dec0).cast("double")
-                    / F.col("ht").cast("double"), dp
-                ).alias("hub"),
-                "auth")
-            .localCheckpoint(eager=True)
-        )
+
+    def step(scores: DataFrame, _: int, ckpt) -> DataFrame:
+        auth = ckpt(half(scores, "hub", "auth", "src", "dst"))
+        return ckpt(half(auth, "auth", "hub", "dst", "src"))
+
+    scores = _iterate(scores, step, n_iter, pinned=(e, verts, scores))
     return scores.select("vertex", "hub", F.col("auth").alias("authority"))
 
 
@@ -725,14 +638,7 @@ def triangle_count(
     one explode-and-count; everything equi-keyed, nothing cartesian.
     Returns ``(vertex, n_triangles)`` for every vertex incident to at
     least one edge (0 rows included via the vertex table)."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _canonical(edges, src, dst)
     deg = (
         und.select(F.explode(F.array("a", "b")).alias("v"))
         .groupBy("v").agg(F.count(F.lit(1)).alias("d"))
@@ -792,18 +698,12 @@ def clustering_coefficient(
     hubs do not). Vertices with degree < 2 read 0 (no wedge to
     close). Exact integer counts, one ``dp``-rounded division.
     Returns ``(vertex, degree, n_triangles, coefficient)``."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _canonical(edges, src, dst, checkpoint=False)
     deg = (
         und.select(F.explode(F.array("a", "b")).alias("vertex"))
         .groupBy("vertex").agg(F.count(F.lit(1)).alias("degree"))
     )
-    tri = triangle_count(edges)
+    tri = triangle_count(edges, src, dst)
     return (
         deg.join(tri, "vertex")
         .select(
@@ -835,35 +735,29 @@ def bfs_distances(
     Scale shape: classic frontier expansion — per round ONE join
     (frontier ⋈ edges) + one distinct + one anti-join against the
     settled set (only NEWLY reached vertices survive, so frontiers
-    shrink as the ball saturates); ``localCheckpoint`` per round
-    (the iterative rule). Rounds = ``max_depth``, not diameter —
-    the budget is the caller's radius, never a convergence hope."""
+    shrink as the ball saturates). Rounds = ``max_depth``, not
+    diameter — the budget is the caller's radius, never a convergence
+    hope."""
     if max_depth < 0:
         raise ValueError("max_depth must be >= 0")
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst)
     seed_col = seeds.columns[0]
     dist = seeds.select(
         F.col(seed_col).alias("vertex"), F.lit(0).alias("dist")
     ).distinct().localCheckpoint(eager=True)
-    frontier = dist
-    for k in range(1, max_depth + 1):
-        nxt = (
+
+    def step(state: tuple, i: int, ckpt) -> tuple:
+        dist, frontier = state
+        nxt = ckpt(
             frontier.join(und, frontier.vertex == und.a)
             .select(F.col("b").alias("vertex"),
-                    F.lit(k).alias("dist"))
+                    F.lit(i + 1).alias("dist"))
             .distinct()
             .join(dist.select("vertex"), "vertex", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return dist
+        return ckpt(dist.unionByName(nxt)), nxt
+
+    return _iterate((dist, dist), step, max_depth, pinned=(und, dist))
 
 
 def k_core_peel(
@@ -883,32 +777,26 @@ def k_core_peel(
     reaches fixpoint far earlier and further rounds are no-ops.
 
     Per round: one degree aggregation over the surviving edge set +
-    one semi-join filter — everything keyed, lineage checkpointed.
-    Returns ``(vertex, degree)`` of the surviving subgraph."""
+    one semi-join filter — everything keyed. Returns ``(vertex,
+    degree)`` of the surviving subgraph."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = und
-    for _ in range(rounds):
+    und = _canonical(edges, src, dst)
+
+    def step(e: DataFrame, _: int, ckpt) -> DataFrame:
         deg = (
             e.select(F.explode(F.array("a", "b")).alias("v"))
             .groupBy("v").agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("v")
-        e = (
+        return ckpt(
             e.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
         )
+
+    e = _iterate(und, step, rounds, pinned=(und,))
     return (
         e.select(F.explode(F.array("a", "b")).alias("vertex"))
         .groupBy("vertex")
@@ -942,26 +830,18 @@ def adamic_adar_links(
     ``max_center_degree`` drops them loudly (the documented recall
     trade every production common-neighbor job makes; celebrity hubs
     contribute ~0 weight anyway)."""
-    import warnings as _w
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     # degree-1 centers have a single neighbor — no wedge to form, and
     # their 1/ln(1) would divide by zero under ANSI; drop them early
     centers = und.join(deg, "a").filter(F.col("d") >= 2).select(
         F.col("a").alias("z"), F.col("b").alias("n"), "d")
     if max_center_degree is not None:
-        _w.warn(
+        warnings.warn(
             f"adamic_adar_links: centers over degree {max_center_degree} "
             "are dropped — scores on pairs only connected through "
             "super-hubs are lost (each contributes < "
-            f"{1.0 / __import__('math').log(max_center_degree):.3f})")
+            f"{1.0 / math.log(max_center_degree):.3f})")
         centers = centers.filter(F.col("d") <= max_center_degree)
     weight = F.round(1.0 / F.log(F.col("d")), 9).cast("decimal(20,9)")
     w1 = centers.select("z", F.col("n").alias("x"), weight.alias("__w"))
@@ -1007,19 +887,11 @@ def jaccard_links(
     standard common-neighbor recall trade — a celebrity hub inflates
     the candidate set quadratically while its Jaccard contribution is
     diluted by the union term anyway)."""
-    import warnings as _w
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     centers = und.select(F.col("a").alias("z"), F.col("b").alias("n"))
     if max_center_degree is not None:
-        _w.warn(
+        warnings.warn(
             f"jaccard_links: centers over degree {max_center_degree} are "
             "dropped — pairs only connected through super-hubs lose those "
             "intersection contributions")
@@ -1084,13 +956,7 @@ def modularity_communities(
     grouped counts — nothing all-pairs. Returns
     ``(community, n_vertices, internal_edges, degree_sum,
     contribution)`` ordered by community."""
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst)
     lab = labels.select(
         F.col(vertex_col).alias("v"), F.col(label_col).alias("lbl"))
     verts = und.select(F.col("a").alias("v")).distinct()
@@ -1157,8 +1023,7 @@ def shortest_paths_weighted(
     set, and is EXACT for the <=k-edge metric (any <=k-edge shortest
     path has a strictly-improving prefix chain, so every link is
     relaxed from a frontier member the round after its prefix settles).
-    ``localCheckpoint`` per round (the iterative-plan rule); integer
-    weights keep the min-merge engine-exact.
+    Integer weights keep the min-merge engine-exact.
 
     ``validate_weights=False`` skips the eager non-negativity probe
     (one early-exit cluster round-trip per call) for hot paths whose
@@ -1195,29 +1060,28 @@ def shortest_paths_weighted(
     dist = seeds.select(
         F.col(seed_col).alias("vertex"), F.lit(0).cast("long").alias("dist")
     ).distinct().localCheckpoint(eager=True)
-    frontier = dist
-    for _ in range(max_hops):
+
+    def step(state: tuple, _: int, ckpt) -> tuple:
+        dist, frontier = state
         cand = (
             frontier.join(und, frontier.vertex == und.a)
             .select(F.col("b").alias("vertex"),
                     (F.col("dist") + F.col("w")).alias("dist"))
             .groupBy("vertex").agg(F.min("dist").alias("dist"))
         )
-        merged = (
+        merged = ckpt(
             dist.unionByName(cand)
             .groupBy("vertex").agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
-        frontier = (
+        return merged, ckpt(
             merged.join(
                 dist.withColumnRenamed("dist", "__old"), "vertex", "left")
             .filter(F.col("__old").isNull()
                     | (F.col("dist") < F.col("__old")))
             .select("vertex", "dist")
-            .localCheckpoint(eager=True)
         )
-        dist = merged
-    return dist
+
+    return _iterate((dist, dist), step, max_hops, pinned=(und, dist))
 
 
 def bipartite_projection(
@@ -1360,11 +1224,7 @@ def degree_assortativity(
     closed form over the directed-both-ways edge multiset (each
     undirected edge contributes both orientations — the standard
     symmetric estimator)."""
-    e = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    sym = e.unionAll(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).filter(F.col("a") != F.col("b")).distinct()
+    sym = _undirected(edges, src_col, dst_col, checkpoint=False)
     deg = sym.groupBy("a").agg(
         F.count(F.lit(1)).cast("long").alias("deg"))
     j = (

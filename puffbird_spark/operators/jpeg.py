@@ -526,10 +526,6 @@ def decode_jpeg_gray(blob: bytes) -> tuple[int, int, bytes]:
     return width, height, bytes(out[:height, :width].tobytes())
 
 
-def _read_symbol(r: _BitReader, table: dict) -> int:
-    return r.read_code(_huff_lut(table))
-
-
 def _decode_scan(sc, components, mcus_x, mcus_y, progressive) -> None:
     """Entropy-decode one scan into the components' coefficient
     planes. Handles interleaved DC/full scans, non-interleaved band

@@ -111,15 +111,6 @@ def has_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in formatted_plan(df)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    """Whole-stage-codegen span count via simple-mode stars ``*(N)``."""
-    simple = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "simple"
-    )
-    ids = re.findall(r"\*\((\d+)\)", simple)
-    return len(set(ids))
-
-
 def fence(df: DataFrame, keys: list[str], **exprs) -> DataFrame:
     """Materialize expensive expressions as bound attributes behind a
     one-element explode.

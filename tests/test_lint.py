@@ -94,3 +94,36 @@ def test_legacy_allowlist_not_stale():
         assert n == allowed, (
             f"{name}: allowlist says {allowed} legacy sites, found {n} — "
             f"update _LEGACY_BARE_TOKENS to match")
+
+
+def test_graph_round_loops_use_iterate_helper():
+    """Every iterative graph operator runs its rounds through
+    ``operators/graph.py::_iterate``, which checkpoints each round and
+    releases the previous one. A ``localCheckpoint`` inside a ``for`` or
+    ``while`` body anywhere else in the module is a hand-rolled round
+    loop that pins one checkpoint per round and never releases them."""
+    import ast
+
+    path = os.path.join(REPO, "puffbird_spark", "operators", "graph.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+
+    def loop_checkpoints(node, in_loop=False):
+        if isinstance(node, ast.FunctionDef) and node.name == "_iterate":
+            return
+        if (in_loop and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"):
+            yield node.lineno
+        loop = isinstance(node, (ast.For, ast.While))
+        for field, value in ast.iter_fields(node):
+            children = value if isinstance(value, list) else [value]
+            for child in children:
+                if isinstance(child, ast.AST):
+                    yield from loop_checkpoints(
+                        child, in_loop or (loop and field == "body"))
+
+    found = list(loop_checkpoints(tree))
+    assert not found, (
+        f"localCheckpoint inside a round loop at graph.py lines {found} — "
+        "run the rounds through _iterate")

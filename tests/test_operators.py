@@ -698,63 +698,62 @@ def test_merge_duplicate_and_null_update_keys(spark):
 
 
 def test_connected_components_empty_input(spark):
-    from puffbird_spark.operators.graph import (
-        connected_components, connected_components_star)
+    from puffbird_spark.operators.graph import connected_components
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(empty).count() == 0
-    assert connected_components_star(empty).count() == 0
 
 
-def test_star_cc_matches_minlabel_on_shapes(spark):
-    """Large-star/small-star must label chain, triangle, lone pair, and a
-    chain longer than one alternation identically to min-label."""
-    from puffbird_spark.operators.graph import (
-        connected_components, connected_components_star)
+def _union_find_components(edges):
+    """Plain-Python reference: vertex -> minimum vertex id of its
+    component, over the vertices that appear in an edge."""
+    parent = {}
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4),
-         (10, 11), (11, 12), (10, 12),
-         (20, 21)] + [(100 + i, 101 + i) for i in range(32)],
-        ["id_a", "id_b"],
-    )
-    ml = {(r["vertex"], r["component"])
-          for r in connected_components(pairs).collect()}
-    st_ = {(r["vertex"], r["component"])
-           for r in connected_components_star(pairs).collect()}
-    assert st_ == ml
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
 
-
-def test_star_cc_budget_exhaustion_warns(spark):
-    """Like min-label, an exhausted star budget must WARN, not silently
-    split components (a path graph needs >1 alternation)."""
-    from puffbird_spark.operators.graph import connected_components_star
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(16)], ["id_a", "id_b"])
-    with pytest.warns(RuntimeWarning, match="no fixpoint"):
-        connected_components_star(pairs, max_iter=1).collect()
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
 
 
-def test_star_cc_matches_minlabel_random_graphs(spark):
-    """Differential: seeded random graphs (sparse, duplicate edges, both
-    orientations, self-loops) — the star alternation must produce the
-    exact (vertex, component) set of min-label."""
+def test_connected_components_matches_union_find_on_shapes(spark):
+    """Chain, triangle, lone pair, and a 32-edge chain (longer than one
+    path-halving round) label exactly as union-find does."""
+    from puffbird_spark.operators.graph import connected_components
+
+    edges = ([(1, 2), (2, 3), (3, 4),
+              (10, 11), (11, 12), (10, 12),
+              (20, 21)] + [(100 + i, 101 + i) for i in range(32)])
+    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+    got = {r["vertex"]: r["component"]
+           for r in connected_components(pairs).collect()}
+    assert got == _union_find_components(edges)
+
+
+def test_connected_components_matches_union_find_random_graphs(spark):
+    """Seeded random graphs with duplicate edges and both orientations
+    of an edge: min-label needs no edge dedup (min is idempotent), so
+    the (vertex, component) map must equal union-find's."""
     import random
 
-    from puffbird_spark.operators.graph import (
-        connected_components, connected_components_star)
+    from puffbird_spark.operators.graph import connected_components
 
     for seed, n, m in [(7, 60, 45), (11, 80, 120), (13, 50, 200)]:
         rng = random.Random(seed)
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        pairs = spark.createDataFrame(edges, ["id_a", "id_b"]).filter(
-            F.col("id_a") != F.col("id_b"))
-        ml = {(r["vertex"], r["component"])
-              for r in connected_components(pairs).collect()}
-        st_ = {(r["vertex"], r["component"])
-               for r in connected_components_star(pairs).collect()}
-        assert st_ == ml, f"seed={seed}"
+        edges = [(a, b) for a, b in edges if a != b]
+        edges += [(b, a) for a, b in edges[::3]] + edges[::5]
+        pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+        got = {r["vertex"]: r["component"]
+               for r in connected_components(pairs).collect()}
+        assert got == _union_find_components(edges), f"seed={seed}"
 
 
 def test_incremental_dedup_replays_to_full_dedup(spark, sf_dir):
@@ -4537,6 +4536,76 @@ def test_triangle_count_matches_brute_force(spark):
             want[a] += 1; want[b] += 1; want[c] += 1
     assert got == want, (got, want)
     assert got[5] == 0 and got[6] == 0
+
+
+def test_clustering_coefficient_on_renamed_columns(spark):
+    """An edge list whose columns are not named src/dst gives the same
+    coefficients as the same edges under the default names."""
+    from puffbird_spark.operators.graph import clustering_coefficient
+
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0), (4, 0)]
+    g = spark.createDataFrame(edges, "src long, dst long")
+    want = sorted(map(tuple, clustering_coefficient(g).collect()))
+    renamed = g.toDF("u", "v")
+    got = sorted(map(tuple, clustering_coefficient(
+        renamed, src="u", dst="v").collect()))
+    assert got == want
+    assert dict((r[0], r[3]) for r in got)[1] == 1.0
+
+
+_HYGIENE_EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (7, 8),
+                  (8, 9), (9, 7), (2, 9)]
+
+
+def _hygiene_cases():
+    from puffbird_spark.operators import graph as G
+
+    def pairs(spark):
+        return spark.createDataFrame(_HYGIENE_EDGES, "id_a long, id_b long")
+
+    def edges(spark):
+        return spark.createDataFrame(_HYGIENE_EDGES, "src long, dst long")
+
+    def seeds(spark):
+        return spark.createDataFrame([(1,), (7,)], "vertex long")
+
+    def weighted(spark):
+        return spark.createDataFrame(
+            [(a, b, (a * b) % 5) for a, b in _HYGIENE_EDGES],
+            "src long, dst long, weight long")
+
+    empty_state = "vertex long, component long"
+    return {
+        "pagerank": lambda s: G.pagerank(edges(s), n_iter=5),
+        "pagerank_personalized": lambda s: G.pagerank(
+            edges(s), n_iter=5, seeds=seeds(s)),
+        "connected_components": lambda s: G.connected_components(pairs(s)),
+        "dedup_clusters": lambda s: G.dedup_clusters(pairs(s)),
+        "incremental_components": lambda s: G.incremental_components(
+            pairs(s), s.createDataFrame([], empty_state)),
+        "label_propagation": lambda s: G.label_propagation(edges(s)),
+        "hits": lambda s: G.hits(edges(s)),
+        "k_core_peel": lambda s: G.k_core_peel(edges(s), k=2),
+        "bfs_distances": lambda s: G.bfs_distances(edges(s), seeds(s)),
+        "shortest_paths_weighted": lambda s: G.shortest_paths_weighted(
+            weighted(s), seeds(s)),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_hygiene_cases()))
+def test_graph_operators_release_round_checkpoints(spark, name):
+    """An iterative graph operator leaves at most one persisted RDD —
+    the checkpoint its result reads — and the result still collects,
+    twice, to the same rows after the rest are released."""
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = pinned()
+    out = _hygiene_cases()[name](spark)
+    first = sorted(map(tuple, out.collect()))
+    assert first
+    assert len(pinned() - before) <= 1, name
+    assert sorted(map(tuple, out.collect())) == first
 
 
 def test_rrf_fusion_hand_computation(spark):
