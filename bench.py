@@ -1,51 +1,31 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": total_cold_sec, "unit": "sec",
- "value_warm": total_warm_sec, "queries": {name: warm_med3_sec},
- "sf": ...}
+"""Benchmark runner: the BENCH_QUERIES headline set at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Round-7 stdout packing (VERDICT r6 #5): per-query stdout is the OFFICIAL
-number only — warm med3, a scalar, which is also the driver's spec'd
-``{"queries": {name: sec}}`` shape. The r5-r6 ``[cold, warm]`` pairs for
-46 queries left no room under the driver's 2000-char stdout tail for the
-six round-6 heavyweights; per-query cold remains on stderr (every run,
-with med3 samples and kernel lines) and the cold TOTAL stays in
-``value``. Round-over-round ratio lines are warm-vs-warm accordingly.
+Every query runs four times in one session (``measure``): once cold,
+which includes plan analysis, codegen and the first Python stage, and
+three times warm. The warm figure is the median of the three, so one
+noisy sample does not move it. Work is forced with a count() over the
+result. Per query, stderr gets the cold and warm times, the sorted warm
+samples, the row count and a ``# kernel`` line naming the kernel each
+auto-gated operator picked (puffbird_spark/telemetry.py).
 
-Round-4 methodology (VERDICT r3 #3), tightened round 6 (VERDICT r5 #2):
-every query runs FOUR times in-session.
-- cold  = first run: includes plan analysis, codegen, Arrow worker
-  spin-up (~0.5 s/worker for the first Python stage of a session) — what
-  a one-shot job pays.
-- warm  = MEDIAN of the next 3 runs: steady-state throughput — what a
-  long-lived cluster pays per query, robust to one noisy sample on a
-  loaded driver host (single warm samples produced two rounds of
-  unattributable 1.5-5x "regressions" that were ambient load). The
-  sorted samples print to stderr per query, as does a `# kernel` line
-  naming the Arrow-vs-Column/HOF choice each auto-gated operator made
-  (puffbird_spark/telemetry.py), so any residual outlier is
-  attributable to a kernel flip vs the host.
+Stdout is ONE JSON line:
+{"metric": "bench_total_runtime", "value": total_cold_sec, "unit": "sec",
+ "value_warm": total_warm_sec, "queries": {name: warm_sec}, "sf": ...}
 
-Round-5 stdout contract (VERDICT r4 #2): the driver snapshots only the
-LAST 2000 chars of stdout (`tail` in BENCH_r*.json) — round 4's line
-(two parallel 35-query dicts + ratio_vs_prev) overflowed that and the
-official record came back ``parsed: null``. The line now packs cold+warm
-as a single ``{name: [cold, warm]}`` dict at 2 dp, drops
-``ratio_vs_prev`` from stdout (derivable from the previous round's
-snapshot), and ``tests/test_bench_contract.py`` asserts the worst-case
-serialized line stays under 1800 chars. Full 3-dp detail and the
-vs-previous ratios still go to stderr per query.
-
-Work is forced with a count() over the result (no driver-side collect of
-payload rows).
+The driver keeps only the last 2000 characters of stdout, and the whole
+bench set does not fit in them. ``queries`` therefore holds the fixed
+STDOUT_QUERIES set: the same keys on every run, whatever the measured
+times. ``tests/test_bench_contract.py`` pins the worst-case line (every
+value 9999.99) at STDOUT_LINE_BUDGET chars. The totals cover every bench
+entry, and ``bench_full.json`` records every entry's cold and warm time
+at 3 dp, with the host load average at start and end.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import statistics
 import sys
 import time
@@ -263,39 +243,6 @@ BENCH_OVERRIDES = {
 }
 
 
-def _prev_round_timings() -> dict[str, float]:
-    """Official per-query timings from the newest BENCH_r{N}.json in the
-    repo root. r5-r6 snapshots store ``{name: [cold, warm]}`` — take
-    warm (the official number since r6); r1-r4 and r7+ store a scalar
-    (cold historically, warm now) — take it as-is. Ratio lines compare
-    official-vs-official either way."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[int, dict[str, float]] | None = None
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-            # driver snapshots wrap the bench line under "parsed"
-            parsed = data.get("parsed") or {}
-            q = data.get("queries") or parsed.get("queries") or {}
-        except Exception:
-            continue
-        if not q:
-            # parse-broken snapshot (BENCH_r04's parsed:null) — don't let
-            # it shadow an older round's valid timings
-            continue
-        rnd = int(m.group(1))
-        if best is None or rnd > best[0]:
-            best = (rnd, {
-                k: float(v[-1] if isinstance(v, (list, tuple)) else v)
-                for k, v in q.items()
-            })
-    return best[1] if best else {}
-
-
 def _warm_python_workers(spark, cpus: int) -> None:
     """Keep the Python worker fleet hot; call before each measured query.
 
@@ -377,56 +324,78 @@ def _drop_leaked_blocks(spark) -> None:
         rdd.unpersist(True)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+def bench_session(app_name: str, sf_dir: str):
+    """A local[$SPARK_GRAFT_CPUS] session with 2x cpus shuffle
+    partitions, warmed up so the first measured query does not absorb
+    executor spin-up (~10 s): a tiny shuffle, one table footer and the
+    Python worker fleet."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
     spark = get_spark(
-        app_name="puffbird-spark-bench",
+        app_name=app_name,
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) * 2,
+        shuffle_partitions=cpus * 2,
     )
-    sf_label = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
-    # one-time JVM/codegen warmup so the first measured query doesn't absorb
-    # executor spin-up (~10s); touches one table footer + a tiny shuffle
     t0 = time.time()
     spark.range(1000).groupBy(F.col("id") % 7).count().count()
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    _warm_python_workers(spark, int(cpus))
+    _warm_python_workers(spark, cpus)
     print(f"# warmup: {time.time() - t0:.3f}s", file=sys.stderr)
+    return spark
+
+
+def measure(spark, fn, sf_dir: str, runs: int, force):
+    """Time ``force(fn(spark, sf_dir))`` once cold, then ``runs`` times
+    warm. The Python worker fleet is kept alive first (the 60 s idle
+    reaper must never fire inside a timed window), and leaked blocks are
+    dropped after every run, outside the timed window. Returns ``(df,
+    rows, cold_s, warm_samples, kernels)``: the cold run's frame and
+    ``force`` result, its wall time, the sorted warm wall times, and the
+    kernels the cold run picked."""
+    _warm_python_workers(spark, spark.sparkContext.defaultParallelism)
+    t0 = time.time()
+    df = fn(spark, sf_dir)
+    rows = force(df)
+    cold = time.time() - t0
+    kernels = drain_kernels()
+    _drop_leaked_blocks(spark)
+    samples = []
+    for _ in range(runs):
+        t0 = time.time()
+        force(fn(spark, sf_dir))
+        samples.append(time.time() - t0)
+        drain_kernels()
+        _drop_leaked_blocks(spark)
+    return df, rows, cold, sorted(samples), kernels
+
+
+def host_loadavg() -> list[float] | None:
+    """The 1/5/15-min load average, or None where the platform has none.
+    Totals on a shared host swing ~1.7x with concurrent load, so a
+    timing is only evidence next to the load it was taken under."""
     try:
-        la = ", ".join(f"{x:.2f}" for x in os.getloadavg())
-        print(f"# host loadavg at start: {la}", file=sys.stderr)
+        return [round(x, 2) for x in os.getloadavg()]
     except OSError:  # pragma: no cover
-        pass
+        return None
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = bench_session("puffbird-spark-bench", sf_dir)
+    sf_label = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    loadavg_start = host_loadavg()
+    print(f"# host loadavg at start: {loadavg_start}", file=sys.stderr)
 
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
     for name in BENCH_QUERIES:
         fn = BENCH_OVERRIDES.get(name) or QUERIES[name]
-        # fleet keep-alive: the 60 s idle reaper (docstring above) must
-        # never fire INSIDE a measured window; ~0.1 s when already hot
-        _warm_python_workers(spark, int(cpus))
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        n = df.count()
-        cold[name] = round(time.time() - t0, 3)
-        kernels = drain_kernels()
-        _drop_leaked_blocks(spark)
-        # warm = MEDIAN of 3 runs (VERDICT r5 #2): a single warm sample on
-        # a loaded host produced two rounds of unattributable regressions;
-        # the median survives one noisy run per query.
-        samples = []
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            samples.append(time.time() - t0)
-            drain_kernels()
-            _drop_leaked_blocks(spark)
+        _, n, cold_s, samples, kernels = measure(
+            spark, fn, sf_dir, 3, lambda df: df.count())
+        cold[name] = round(cold_s, 3)
         warm[name] = round(statistics.median(samples), 3)
         print(
             f"# {name}: cold {cold[name]:.3f}s / warm {warm[name]:.3f}s"
-            f" med3 [{','.join(f'{s:.2f}' for s in sorted(samples))}]"
+            f" med3 [{','.join(f'{s:.2f}' for s in samples)}]"
             f" ({n} rows)",
             file=sys.stderr,
         )
@@ -434,81 +403,91 @@ def main() -> None:
             picks = ",".join(f"{op}={k}" for op, k in sorted(kernels.items()))
             print(f"# kernel {name}: {picks}", file=sys.stderr)
 
-    # vs-previous ratios: stderr only (VERDICT r4 #2 — derivable from the
-    # prior round's snapshot; keeping them off stdout keeps the line small)
-    prev = _prev_round_timings()
-    for name in warm:
-        if name in prev and prev[name] > 0:
-            print(
-                f"# ratio_vs_prev {name}: {warm[name] / prev[name]:.3f}",
-                file=sys.stderr,
-            )
-    try:
-        la = ", ".join(f"{x:.2f}" for x in os.getloadavg())
-        print(f"# host loadavg at end: {la}", file=sys.stderr)
-    except OSError:  # pragma: no cover
-        pass
-    write_full_sidecar(cold, warm, sf_label)
+    loadavg_end = host_loadavg()
+    print(f"# host loadavg at end: {loadavg_end}", file=sys.stderr)
+    write_full_sidecar(cold, warm, sf_label,
+                       loadavg=(loadavg_start, loadavg_end))
     print(json.dumps(build_stdout_record(cold, warm, sf_label),
                      separators=(",", ":")))
     spark.stop()
 
 
-#: serialized stdout-line budget: the driver tail-captures 2000 chars;
-#: stay under this with margin (the r4 overflow came back `parsed: null`)
-STDOUT_LINE_BUDGET = 1800
+#: worst-case stdout line length: the driver keeps the last 2000 chars,
+#: and the line stays well inside that (the round-4 overflow came back
+#: ``parsed: null``)
+STDOUT_LINE_BUDGET = 1200
 
-#: Round-9 rotation decision (VERDICT r7 #8, r8 #5): the stdout line
-#: additionally reserves ~20 future entries' worth of characters, so the
-#: official line provably cannot creep into the capture limit as bench
-#: queries are added. The stdout dict therefore carries the LARGEST-warm
-#: queries that fit (the ones regression analysis can actually use —
-#: sub-second entries are host jitter at sf0.1) and the COMPLETE
-#: per-query record goes to the ``bench_full.json`` sidecar every run.
-#: Nothing is silently capped: totals cover every query, the off-stdout
-#: names are announced on stderr, and the sidecar holds cold+warm at
-#: 3 dp for all of them.
-STDOUT_HEADROOM = 600
+#: the per-query keys of the stdout line, fixed so that every run reports
+#: the same entries: the 38 largest warm times in ``bench_full.json`` at
+#: sf0.1, as many as fit STDOUT_LINE_BUDGET at 9999.99 s each. Sub-second
+#: entries below them are host jitter at sf0.1; they stay in the totals,
+#: on stderr and in the sidecar.
+STDOUT_QUERIES = (
+    "q3_shipping_priority",
+    "q5_region_revenue",
+    "engine_to_long_roundtrip",
+    "dedup_minhash_lsh",
+    "knn_cosine",
+    "dedup_clusters",
+    "text_tfidf",
+    "text_decontaminate",
+    "split_shuffle_order",
+    "text_decontaminate_bloom",
+    "pack_token_budget",
+    "knn_lsh",
+    "text_heavy_hitters",
+    "knn_sq_int8",
+    "text_perplexity_bigram",
+    "text_quality_classifier",
+    "filter_pipeline_audit",
+    "sketch_quantile_kmv",
+    "dedup_semantic",
+    "embedding_kmeans",
+    "sink_training_shards",
+    "q18_large_volume_customers",
+    "dedup_cdc_chunks",
+    "multimodal_audio_decode",
+    "dedup_incremental_embedding",
+    "multimodal_resize_jpeg",
+    "multimodal_framesample_mjpeg",
+    "text_bm25_topk",
+    "graph_pagerank",
+    "knn_ivf_pq",
+    "profile_topk_sparse",
+    "sketch_theta_setops",
+    "retrieval_bm25f",
+    "eval_bleu",
+    "eval_chrf",
+    "q21_waiting_suppliers",
+    "multimodal_ico",
+    "diag_anderson_darling",
+)
 
 FULL_SIDECAR = "bench_full.json"
 
 
 def build_stdout_record(cold: dict[str, float], warm: dict[str, float],
                         sf_label: str) -> dict:
-    """The one-line stdout payload. Kept as a pure function so
-    tests/test_bench_contract.py can assert the serialized size against
-    the driver's 2000-char stdout tail capture (BENCH_r04 lesson).
-    Trims smallest-warm entries until the line fits
-    ``STDOUT_LINE_BUDGET - STDOUT_HEADROOM`` (see rotation note above)."""
-    record = {
+    """The one-line stdout payload: totals over every entry, and the
+    official warm time of each STDOUT_QUERIES entry. A pure function, so
+    tests/test_bench_contract.py can pin its worst-case size."""
+    return {
         "metric": "bench_total_runtime",
         "value": round(sum(cold.values()), 2),
         "unit": "sec",
         "value_warm": round(sum(warm.values()), 2),
-        # per-query stdout is the OFFICIAL number only (warm med3, the
-        # driver's spec'd {name: sec} shape); per-query cold is on stderr
-        # and the full set in the bench_full.json sidecar
-        "queries": {name: round(warm.get(name, 0.0), 2) for name in cold},
+        "queries": {name: round(warm.get(name, 0.0), 2)
+                    for name in STDOUT_QUERIES},
         "sf": float(sf_label) if sf_label.replace(".", "").isdigit() else sf_label,
     }
-    limit = STDOUT_LINE_BUDGET - STDOUT_HEADROOM
-    dropped = []
-    while (len(json.dumps(record, separators=(",", ":")))
-           > limit and record["queries"]):
-        name = min(record["queries"], key=lambda n: (record["queries"][n], n))
-        dropped.append(name)
-        del record["queries"][name]
-    if dropped:
-        print(f"# stdout budget: {len(dropped)} smallest-warm entries are "
-              f"sidecar/stderr-only this run: {dropped}", file=sys.stderr)
-    return record
 
 
 def write_full_sidecar(cold: dict[str, float], warm: dict[str, float],
-                       sf_label: str, path: str | None = None) -> str:
+                       sf_label: str, path: str | None = None,
+                       loadavg: tuple = (None, None)) -> str:
     """The complete per-query record — every bench query's ``[cold,
-    warm]`` at 3 dp plus totals — written beside the repo root each run,
-    so the trimmed stdout line never loses information."""
+    warm]`` at 3 dp plus totals and the host load average at the start
+    and end of the run — written beside the repo root each run."""
     here = os.path.dirname(os.path.abspath(__file__))
     path = path or os.path.join(here, FULL_SIDECAR)
     payload = {
@@ -519,16 +498,9 @@ def write_full_sidecar(cold: dict[str, float], warm: dict[str, float],
             name: [round(cold[name], 3), round(warm.get(name, 0.0), 3)]
             for name in cold
         },
+        "loadavg_start": loadavg[0],
+        "loadavg_end": loadavg[1],
     }
-    # host-load context: totals on this box swing ~1.7x with concurrent
-    # load (the r9 dedup_semantic 2.68x "regression" was exactly this);
-    # recording 1/5/15-min loadavg at write time makes "host noise"
-    # attributable from the record instead of requiring an isolated
-    # re-measure a round later
-    try:
-        payload["loadavg"] = [round(x, 2) for x in os.getloadavg()]
-    except OSError:  # pragma: no cover — platform without getloadavg
-        pass
     with open(path, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
     print(f"# full per-query record: {path}", file=sys.stderr)

@@ -2,6 +2,8 @@
 the QUERIES/ORACLES registries consumed by ``__spark_entry__`` and
 ``bench.py``."""
 
+import os
+
 from .base import ORACLES, QUERIES, load  # noqa: F401
 from . import (  # noqa: F401,E402
     engine_q,
@@ -12,9 +14,6 @@ from . import (  # noqa: F401,E402
     relational,
     sources_q,
     sql_q,
-    staged_r12,
-    staged_r13,
-    staged_r14,
     streaming_q,
     udf_q,
     windows_q,
@@ -26,27 +25,25 @@ from . import (  # noqa: F401,E402
 # ``verify_window.txt`` — never-driver-checked gates first, then stalest
 # evidence first. Re-run the tool (committing the new file) whenever a
 # round's CORRECTNESS lands or a new gate is registered.
-_WINDOW_FILE = __import__("os").path.join(
-    __import__("os").path.dirname(__file__), "verify_window.txt"
-)
+_WINDOW_FILE = os.path.join(os.path.dirname(__file__), "verify_window.txt")
 
 
-def _load_window() -> list[str]:
-    try:
-        with open(_WINDOW_FILE) as fh:
-            return [
-                line.strip()
-                for line in fh
-                if line.strip() and not line.startswith("#")
-            ]
-    except OSError:
-        return []
+def window_names() -> list[str]:
+    """The gate names in ``verify_window.txt``, in file order (comment
+    lines skipped). Raises ``OSError`` if the file is missing."""
+    with open(_WINDOW_FILE) as fh:
+        return [line.strip() for line in fh
+                if line.strip() and not line.startswith("#")]
 
 
 def _reorder() -> None:
+    try:
+        window = window_names()
+    except OSError:
+        window = []
     snapshot = dict(QUERIES)
     QUERIES.clear()
-    for name in _load_window():
+    for name in window:
         if name in snapshot:
             QUERIES[name] = snapshot.pop(name)
     QUERIES.update(snapshot)
@@ -54,4 +51,4 @@ def _reorder() -> None:
 
 _reorder()
 
-__all__ = ["QUERIES", "ORACLES", "load"]
+__all__ = ["QUERIES", "ORACLES", "load", "window_names"]

@@ -5218,6 +5218,81 @@ def diag_friedman(spark, sf_dir):
     return friedman_test(fx, "blk", "trt", "v")
 
 
+_COCHRAN_ORACLE = """
+WITH b AS (SELECT doc_id % 100 AS blk, doc_id // 100 AS trt,
+    CASE WHEN length(text) % 2 = 0 THEN 1 ELSE 0 END AS y
+  FROM documents WHERE doc_id < 300 AND text IS NOT NULL),
+cj AS (SELECT trt, SUM(CAST(y AS HUGEINT)) AS c FROM b GROUP BY trt),
+ri AS (SELECT blk, SUM(CAST(y AS HUGEINT)) AS r FROM b GROUP BY blk),
+cc AS (SELECT SUM(c * c) AS csq, SUM(c) AS t1 FROM cj),
+rr AS (SELECT SUM(r * r) AS rsq, COUNT(*) AS nb FROM ri)
+SELECT CAST(nb AS BIGINT) AS n_blocks, CAST(3 AS BIGINT) AS k,
+  CASE WHEN 3 * t1 - rsq > 0
+       THEN round(CAST(2 * (3 * csq - t1 * t1) AS DOUBLE)
+                  / CAST(3 * t1 - rsq AS DOUBLE), 6) END AS q_stat
+FROM cc, rr
+"""
+
+
+@query("diag_cochran_q", oracle=_COCHRAN_ORACLE)
+def diag_cochran_q(spark, sf_dir):
+    """Cochran's Q (`cochran_q`, operators/drift.py; Cochran 1950) —
+    the binary repeated-measures k-treatment test (`diag_friedman`
+    for pass/fail outcomes: k models judged on the same prompts).
+    Fixture: the shared doc_id<300 COMPLETE 100x3 design with
+    outcome = even text length. All-integer expanded form
+    (k−1)(kΣC² − T²)/(kT − ΣR²) in decimal(38,0); the completeness
+    contract validates up front."""
+    from ..operators.drift import cochran_q
+
+    docs = load(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < 300)
+    fx = docs.select(
+        (F.col("doc_id") % 100).alias("blk"),
+        F.floor(F.col("doc_id") / 100).cast("long").alias("trt"),
+        (F.length("text") % 2 == 0).alias("y"))
+    return cochran_q(fx, "blk", "trt", "y")
+
+
+_PAGE_ORACLE = """
+WITH b AS (SELECT doc_id % 100 AS blk, doc_id // 100 AS trt,
+    length(text) AS v
+  FROM documents WHERE doc_id < 300 AND text IS NOT NULL),
+r AS (SELECT blk, trt,
+    2 * rank() OVER (PARTITION BY blk ORDER BY v)
+      + count(*) OVER (PARTITION BY blk, v) - 1 AS u
+  FROM b),
+pt AS (SELECT trt, SUM(CAST(u AS HUGEINT)) AS uj FROM r GROUP BY 1),
+o AS (SELECT uj, row_number() OVER (ORDER BY trt) AS ordr FROM pt)
+SELECT CAST(100 AS BIGINT) AS n_blocks, CAST(3 AS BIGINT) AS k,
+  CAST(SUM(ordr * uj) AS DOUBLE) / 2.0 AS l_stat,
+  CAST(1200.0 AS DOUBLE) AS l_expect
+FROM o
+"""
+
+
+@query("diag_page_trend", oracle=_PAGE_ORACLE)
+def diag_page_trend(spark, sf_dir):
+    """Page's ordered-alternative trend test (`page_test`,
+    operators/drift.py; Page 1963) — does text length INCREASE
+    across the three ordered treatments of the shared 100x3 design
+    (diag_friedman asks "any difference", Page buys power from the
+    order): L = Σ order_j·R_j over tie-general doubled midranks
+    (exact integers, one halving at release), plus the tabulated
+    null expectation n·k(k+1)²/4; all friedman contracts
+    inherited."""
+    from ..operators.drift import page_test
+
+    docs = load(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") < 300) & F.col("text").isNotNull())
+    return page_test(
+        docs.select(
+            (F.col("doc_id") % 100).alias("blk"),
+            (F.col("doc_id") / 100).cast("long").alias("trt"),
+            F.length("text").alias("score")),
+        "blk", "trt", "score")
+
+
 _GINI_ORACLE = """
 WITH b AS (SELECT CAST(o_totalprice AS DECIMAL(20,6)) AS v FROM orders
   WHERE o_totalprice IS NOT NULL AND NOT isnan(o_totalprice)),
@@ -5365,6 +5440,61 @@ def diag_cliffs_delta(spark, sf_dir):
     return cliffs_delta(li, F.col("l_returnflag") == "R", "l_quantity")
 
 
+_EFFECT_SIZE_ORACLE = """
+WITH b AS (SELECT CAST(value AS DECIMAL(20,6)) AS v,
+    event_type = 'purchase' AS a
+  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
+t AS (SELECT
+    SUM(CASE WHEN a THEN 1 ELSE 0 END) AS na,
+    SUM(CASE WHEN a THEN 0 ELSE 1 END) AS nb,
+    SUM(CASE WHEN a THEN v END) AS sa,
+    SUM(CASE WHEN NOT a THEN v END) AS sb,
+    SUM(CASE WHEN a THEN CAST(v * 1000000 AS HUGEINT)
+                         * CAST(v * 1000000 AS HUGEINT) END) AS qa,
+    SUM(CASE WHEN NOT a THEN CAST(v * 1000000 AS HUGEINT)
+                             * CAST(v * 1000000 AS HUGEINT) END) AS qb
+  FROM b),
+f AS (SELECT CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
+    CAST(na AS DOUBLE) AS nad, CAST(nb AS DOUBLE) AS nbd,
+    CAST(sa AS DOUBLE) AS sad, CAST(sb AS DOUBLE) AS sbd,
+    CAST(qa AS DOUBLE) / 1e12 AS qad,
+    CAST(qb AS DOUBLE) / 1e12 AS qbd
+  FROM t),
+g AS (SELECT *,
+    (nad * qad - sad * sad) / (nad * (nad - 1.0)) AS va,
+    (nbd * qbd - sbd * sbd) / (nbd * (nbd - 1.0)) AS vb
+  FROM f),
+h AS (SELECT *,
+    ((nad - 1.0) * va + (nbd - 1.0) * vb) / (nad + nbd - 2.0) AS pooled
+  FROM g)
+SELECT na AS n_a, nb AS n_b,
+  round(sad / nad, 6) AS mean_a, round(sbd / nbd, 6) AS mean_b,
+  CASE WHEN na >= 2 AND nb >= 2 AND pooled > 0
+       THEN round((sad / nad - sbd / nbd) / sqrt(pooled), 6)
+  END AS cohens_d,
+  CASE WHEN na >= 2 AND nb >= 2 AND pooled > 0
+       THEN round((sad / nad - sbd / nbd) / sqrt(pooled)
+                  * (1.0 - 3.0 / (4.0 * (nad + nbd) - 9.0)), 6)
+  END AS hedges_g
+FROM h
+"""
+
+
+@query("diag_effect_size", oracle=_EFFECT_SIZE_ORACLE)
+def diag_effect_size(spark, sf_dir):
+    """Cohen's d + Hedges' g (`effect_size`, operators/drift.py;
+    Cohen 1988, Hedges 1981) — the standardized mean-difference
+    companion to `diag_mann_whitney`'s significance z: HOW BIG is the
+    purchase-vs-rest value shift. Exact decimal sums, scaled-integer
+    Σx² (the r13 lossy-decimal-square lesson), one aggregation pass,
+    factors-as-double combine."""
+    from ..operators.drift import effect_size
+
+    ev = load(spark, sf_dir, "events")
+    return effect_size(
+        ev, F.col("event_type") == "purchase", "value")
+
+
 _KRUSKAL_ORACLE = """
 WITH b AS (SELECT CAST(l_returnflag AS VARCHAR) AS g, l_quantity AS v
   FROM lineitem WHERE l_returnflag IS NOT NULL
@@ -5480,6 +5610,41 @@ def timeseries_acf_entity(spark, sf_dir):
     return autocorrelation(
         ev, "user_id", "ts", "value", lags=(1, 2, 3),
         order_tiebreak="event_id")
+
+
+_PACF_ORACLE = f"""
+WITH acf AS ({_ACF_ORACLE}),
+p AS (SELECT user_id, MAX(n) AS n,
+    MAX(CASE WHEN lag = 1 THEN acf END) AS r1,
+    MAX(CASE WHEN lag = 2 THEN acf END) AS r2,
+    MAX(CASE WHEN lag = 3 THEN acf END) AS r3
+  FROM acf GROUP BY 1),
+f AS (SELECT user_id, n, r1, r2, r3, 1 - r1 * r1 AS den2 FROM p),
+g AS (SELECT *, (r2 - r1 * r1) / den2 AS p22 FROM f),
+h AS (SELECT *, r1 * (1 - p22) AS p21 FROM g),
+i AS (SELECT *, 1 - p21 * r1 - p22 * r2 AS den3 FROM h)
+SELECT user_id, n, round(r1, 6) AS pacf1,
+  CASE WHEN den2 <> 0 THEN round(p22, 6) END AS pacf2,
+  CASE WHEN den2 <> 0 AND den3 <> 0
+       THEN round((r3 - p21 * r2 - p22 * r1) / den3, 6) END AS pacf3
+FROM i
+"""
+
+
+@query("timeseries_pacf_entity", oracle=_PACF_ORACLE)
+def timeseries_pacf_entity(spark, sf_dir):
+    """Per-entity partial autocorrelation at lags 1..3
+    (`partial_autocorrelation`, operators/timeseries.py; Box &
+    Jenkins / Durbin-Levinson unrolled) — the AR-order selector over
+    each user's event-value sequence, computed from the RELEASED
+    6-dp ACF values so both engines fold identical doubles. Same
+    keyed shuffle shape as `timeseries_acf_entity` plus one keyed
+    pivot fold."""
+    from ..operators.timeseries import partial_autocorrelation
+
+    ev = load(spark, sf_dir, "events")
+    return partial_autocorrelation(
+        ev, "user_id", "ts", "value", order_tiebreak="event_id")
 
 
 _LJUNG_ORACLE = f"""
@@ -5923,6 +6088,48 @@ def timeseries_forecast_accuracy(spark, sf_dir):
             (F.floor(F.col("value") / 50 + 0.5) * 50)
             .cast("double").alias("fc")),
         "user_id", "actual", "fc")
+
+
+_MASE_ORACLE = """
+WITH b AS (SELECT user_id AS e,
+    CAST(CAST(value AS DECIMAL(20,6)) * 1000000 AS HUGEINT) AS y,
+    CAST(CAST(floor(value / 50 + 0.5) * 50 AS DECIMAL(20,6))
+      * 1000000 AS HUGEINT) AS f,
+    ts, event_id
+  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
+s AS (SELECT e, y, f, lag(y, 1) OVER w AS p
+  FROM b WINDOW w AS (PARTITION BY e ORDER BY ts, event_id)),
+a AS (SELECT e, CAST(COUNT(*) AS HUGEINT) AS n,
+    SUM(abs(y - f)) AS se,
+    SUM(CASE WHEN p IS NOT NULL THEN abs(y - p) END) AS sd
+  FROM s GROUP BY 1)
+SELECT e AS user_id, CAST(n AS BIGINT) AS n,
+  CASE WHEN n >= 2 AND n * sd > 0
+       THEN CAST((n - 1) * se AS DOUBLE) / CAST(n * sd AS DOUBLE)
+  END AS mase
+FROM a
+"""
+
+
+@query("timeseries_mase", oracle=_MASE_ORACLE)
+def timeseries_mase(spark, sf_dir):
+    """Per-entity Mean Absolute Scaled Error (`mase`,
+    operators/timeseries.py; Hyndman & Koehler 2006) — how much
+    better than lag-1 persistence the 50-unit quantizer "forecast"
+    tracks each user's event values: the scale-free forecast metric
+    as one exact integer ratio (n−1)·Σ|e| / (n·Σ|Δy|) over scaled
+    integers, raw-double release, the ACF ordering contract; NULL
+    for constant series (nothing to scale by)."""
+    from ..operators.timeseries import mase
+
+    ev = load(spark, sf_dir, "events")
+    return mase(
+        ev.select(
+            "user_id", "ts", "event_id",
+            F.col("value").alias("actual"),
+            (F.floor(F.col("value") / 50 + 0.5) * 50)
+            .cast("double").alias("fc")),
+        "user_id", "ts", "actual", "fc", order_tiebreak="event_id")
 
 
 _BENFORD_ORACLE = """

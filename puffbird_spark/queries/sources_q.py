@@ -3497,6 +3497,124 @@ def multimodal_tiff_raster(spark, sf_dir):
     return tiff_stats(docs)
 
 
+_EXIF_ORACLE = """
+WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS path,
+    doc_id % 997 AS s,
+    CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS bo
+  FROM documents)
+SELECT path, bo AS byte_order,
+  CAST(8 AS INTEGER) AS n_ifd0, CAST(3 AS INTEGER) AS n_exif,
+  CAST(640 + s % 1360 AS BIGINT) AS width,
+  CAST(480 + s % 600 AS BIGINT) AS height,
+  CAST(1 + s % 8 AS INTEGER) AS orientation,
+  'CAM' || CAST(s % 10 AS VARCHAR) AS make,
+  'MODEL-' || CAST(s % 100 AS VARCHAR) AS model,
+  printf('2024:%02d:%02d %02d:%02d:%02d',
+         1 + s % 12, 1 + s % 28, s % 24, s % 60, s % 60) AS datetime,
+  CAST(72 + s % 228 AS BIGINT) AS xres_num,
+  CAST(1 AS BIGINT) AS xres_den,
+  CAST(1 AS BIGINT) AS exposure_num,
+  CAST(60 + s % 940 AS BIGINT) AS exposure_den,
+  CAST(100 * (1 + s % 32) AS INTEGER) AS iso,
+  CAST((35 + s % 165) * 10 + s % 10 AS BIGINT) AS focal_num,
+  CAST(10 AS BIGINT) AS focal_den
+FROM d
+"""
+
+
+@query("multimodal_exif", oracle=_EXIF_ORACLE)
+def multimodal_exif(spark, sf_dir):
+    """TIFF/EXIF metadata extraction (`exif_metadata` +
+    `decode_tiff_exif`, operators/multimodal.py) — REAL IFD walks
+    (byte-order + magic validation, ascending-tag entries, the 4-byte
+    inline-vs-offset rule, ASCII/SHORT/LONG/RATIONAL, EXIF sub-IFD
+    pointer) over fixture TIFFs that ALTERNATE little/big endian by
+    doc parity, so both decode paths are driven. The oracle replays
+    every released field closed-form from the seed — encoder and
+    decoder must both be exactly right. Arrow mapInPandas media
+    shape, zero shuffle, metadata-only byte touches."""
+    from ..operators.dedup import widen_parallelism
+    from ..operators.multimodal import encode_tiff_exif, exif_metadata
+
+    def _make(doc_id):
+        return doc_id.map(
+            lambda i: encode_tiff_exif(
+                int(i) % 997, "II" if int(i) % 2 == 0 else "MM"))
+
+    make_tiff = F.pandas_udf(_make, returnType="binary")
+    docs = widen_parallelism(load(spark, sf_dir, "documents")).select(
+        F.col("doc_id").cast("string").alias("path"),
+        make_tiff(F.col("doc_id")).alias("content"))
+    return exif_metadata(docs)
+
+
+_TGA_ORACLE = """
+WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS path, doc_id % 997 AS s,
+    doc_id % 2 = 0 AS gray,
+    (doc_id // 2) % 2 = 1 AS rle,
+    doc_id % 2 = 1 AND (doc_id // 8) % 2 = 1 AS alpha,
+    5 + (doc_id % 997) % 12 AS w, 4 + (doc_id % 997) % 8 AS h
+  FROM documents),
+xs AS (SELECT *, unnest(range(w)) AS x FROM d),
+pix AS (SELECT *, unnest(range(h)) AS y FROM xs),
+v AS (SELECT path, gray, rle, alpha, w, h, s,
+    CASE WHEN gray THEN (s + 3 * x + 7 * y) % 256
+         ELSE (s + x + y) % 256 END AS r,
+    CASE WHEN gray THEN (s + 3 * x + 7 * y) % 256
+         ELSE (2 * s + 2 * x + y) % 256 END AS g,
+    CASE WHEN gray THEN (s + 3 * x + 7 * y) % 256
+         ELSE (3 * s + x + 2 * y) % 256 END AS b
+  FROM pix)
+SELECT path,
+  CAST(MAX(w) AS INT) AS width, CAST(MAX(h) AS INT) AS height,
+  CAST(CASE WHEN MAX(CAST(gray AS INT)) = 1 THEN 1
+            WHEN MAX(CAST(alpha AS INT)) = 1 THEN 4
+            ELSE 3 END AS INT) AS channels,
+  MAX(rle) AS rle,
+  CAST(COUNT(*) AS BIGINT) AS n_px,
+  CAST(SUM(r) AS BIGINT) AS sum_r,
+  CAST(SUM(g) AS BIGINT) AS sum_g,
+  CAST(SUM(b) AS BIGINT) AS sum_b,
+  CAST(MAX(s) % 256 AS INT) AS first_r,
+  CAST(CASE WHEN MAX(CAST(gray AS INT)) = 1 THEN MAX(s) % 256
+            ELSE (2 * MAX(s)) % 256 END AS INT) AS first_g,
+  CAST(CASE WHEN MAX(CAST(gray AS INT)) = 1 THEN MAX(s) % 256
+            ELSE (3 * MAX(s)) % 256 END AS INT) AS first_b
+FROM v GROUP BY path
+"""
+
+
+@query("multimodal_tga", oracle=_TGA_ORACLE)
+def multimodal_tga(spark, sf_dir):
+    """TGA/TARGA decode (`decode_tga` + `tga_stats`,
+    operators/multimodal.py; Truevision TGA 2.0) — REAL decodes
+    rotating gray/truecolor x raw/RLE x alpha x BOTH vertical
+    origins by doc-id bits: the decoder must normalize BGR(A)→RGB(A)
+    and bottom-up→top-down, and the released top-left pixel is what
+    makes the row flip and channel swap hash-detectable (channel
+    sums alone are order-agnostic). RLE fixtures alternate run and
+    raw packets. Arrow mapInPandas media shape, zero shuffle."""
+    from ..operators.dedup import widen_parallelism
+    from ..operators.multimodal import encode_tga, tga_stats
+
+    def _make(doc_id):
+        def one(i):
+            i = int(i)
+            gray = i % 2 == 0
+            return encode_tga(
+                5 + i % 997 % 12, 4 + i % 997 % 8, seed=i % 997,
+                gray=gray, rle=(i // 2) % 2 == 1,
+                alpha=(not gray) and (i // 8) % 2 == 1,
+                top_down=(i // 4) % 2 == 1)
+        return doc_id.map(one)
+
+    make_tga = F.pandas_udf(_make, returnType="binary")
+    docs = widen_parallelism(load(spark, sf_dir, "documents")).select(
+        F.col("doc_id").cast("string").alias("path"),
+        make_tga(F.col("doc_id")).alias("content"))
+    return tga_stats(docs)
+
+
 @query("source_warc_records", oracle="""
 WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS path, doc_id AS did,
     doc_id % 997 AS s, 2 + doc_id % 3 AS nrec

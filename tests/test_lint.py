@@ -127,3 +127,34 @@ def test_graph_round_loops_use_iterate_helper():
     assert not found, (
         f"localCheckpoint inside a round loop at graph.py lines {found} — "
         "run the rounds through _iterate")
+
+
+def test_every_query_module_is_registered():
+    """Every gate module under ``queries/`` is imported by the package,
+    so every written gate is in the registry. A gate module that is not
+    imported is dead weight that drifts out of sync with the oracle
+    conventions, and a round-named module (``*_rNN``) is a staging file;
+    gates belong in their family module."""
+    import ast
+
+    with open(os.path.join(QUERIES_DIR, "__init__.py")) as fh:
+        tree = ast.parse(fh.read())
+    imported = {
+        alias.name for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and node.level == 1
+        and node.module is None
+        for alias in node.names
+    }
+    unregistered, round_named = [], []
+    for path in sorted(glob.glob(os.path.join(QUERIES_DIR, "*.py"))):
+        name = os.path.basename(path)[:-3]
+        if re.search(r"_r\d+", name):
+            round_named.append(name)
+        with open(path) as fh:
+            if "@query(" in fh.read() and name not in imported:
+                unregistered.append(name)
+    assert not unregistered, (
+        f"gate modules not imported by queries/__init__.py: {unregistered}")
+    assert not round_named, (
+        f"round-named query modules: {round_named} — move the gates into "
+        "their family module")

@@ -90,20 +90,12 @@ def test_stale_quota_reserves_slots_ahead_of_never():
     assert window == ["s3", "s1", "s2", "n1"]
 
 
-def _committed_lines():
-    with open(WINDOW_PATH) as fh:
-        return [
-            line.strip() for line in fh
-            if line.strip() and not line.startswith("#")
-        ]
-
-
 def test_committed_window_matches_tool_output():
     """The committed verify_window.txt must be reproducible from the
     committed CORRECTNESS history — a hand-edit or a missed regeneration
     fails here. The header records the generation round and stale quota so
     the replay uses the same inputs the tool did."""
-    from puffbird_spark.queries import ORACLES, QUERIES
+    from puffbird_spark.queries import ORACLES, QUERIES, window_names
 
     with open(WINDOW_PATH) as fh:
         header = fh.read()
@@ -124,16 +116,16 @@ def test_committed_window_matches_tool_output():
         list(QUERIES), history, slots=SLOTS, defer=(),
         red=tuple(reds), stale_quota=quota,
     )
-    committed = _committed_lines()
+    committed = window_names()
     assert committed == expected
     # the registry's first SLOTS entries are exactly the window
     assert list(QUERIES)[:len(committed)] == committed
 
 
 def test_window_names_all_registered():
-    from puffbird_spark.queries import ORACLES, QUERIES
+    from puffbird_spark.queries import ORACLES, QUERIES, window_names
 
-    committed = _committed_lines()
+    committed = window_names()
     assert len(committed) == SLOTS
     for name in committed:
         assert name in QUERIES, name

@@ -173,12 +173,9 @@ def main() -> int:
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     if args.window:
-        window_path = os.path.join(
-            REPO, "puffbird_spark", "queries", "verify_window.txt")
-        with open(window_path) as fh:
-            names = [ln.strip() for ln in fh
-                     if ln.strip() and not ln.startswith("#")]
-        names += args.names
+        from puffbird_spark.queries import window_names
+
+        names = window_names() + args.names
     else:
         names = args.names or list(queries)
 

@@ -1,8 +1,8 @@
 """Isolated per-query measurement for optimization work (guide §1).
 
-Times named registry queries in a fresh bench-identical session
-(local[$SPARK_GRAFT_CPUS], shuffle=2x cpus): cold + warm med3 with the
-bench's count() action (comparable to bench.py numbers), optionally the
+Times named registry queries with bench.py's own session set-up and
+``measure`` loop (local[$SPARK_GRAFT_CPUS], shuffle=2x cpus): cold +
+warm med3 with the bench's count() action, optionally the
 noop sink (--noop: computes every column, the guide §1.4 measurement),
 and writes .explain("formatted") to plans/<tag>/<name>_<suffix>.txt
 when --plans TAG_SUFFIX is given (e.g. --plans r14/before).
@@ -18,7 +18,6 @@ import argparse
 import os
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -36,29 +35,11 @@ def main() -> None:
                          "<name>_before.txt)")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
-    from bench import (BENCH_OVERRIDES, _drop_leaked_blocks,
-                       _warm_python_workers)
+    from bench import BENCH_OVERRIDES, bench_session, host_loadavg, measure
     from puffbird_spark.queries import QUERIES
-    from puffbird_spark.session import get_spark
-    from puffbird_spark.telemetry import drain_kernels
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = get_spark(
-        app_name="puffbird-spark-opt-measure",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) * 2,
-    )
-    # same warmup as bench.py
-    spark.range(1000).groupBy(F.col("id") % 7).count().count()
-    spark.read.parquet(f"{args.sf_dir}/region.parquet").count()
-    _warm_python_workers(spark, int(cpus))
-    try:
-        la = ", ".join(f"{x:.2f}" for x in os.getloadavg())
-        print(f"# loadavg at start: {la}", file=sys.stderr)
-    except OSError:
-        pass
+    spark = bench_session("puffbird-spark-opt-measure", args.sf_dir)
+    print(f"# loadavg at start: {host_loadavg()}", file=sys.stderr)
 
     plan_dir = suffix = None
     if args.plans:
@@ -74,25 +55,13 @@ def main() -> None:
 
     for name in args.names:
         fn = BENCH_OVERRIDES.get(name) or QUERIES[name]
-        _warm_python_workers(spark, int(cpus))  # fleet keep-alive
         spark.sparkContext.setJobDescription(f"opt-measure: {name}")
-        t0 = time.time()
-        df = fn(spark, args.sf_dir)
-        n = force(df)
-        cold = time.time() - t0
-        drain_kernels()
-        _drop_leaked_blocks(spark)
-        samples = []
-        for _ in range(args.runs):
-            t0 = time.time()
-            force(fn(spark, args.sf_dir))
-            samples.append(time.time() - t0)
-            drain_kernels()
-            _drop_leaked_blocks(spark)
+        df, n, cold, samples, _ = measure(
+            spark, fn, args.sf_dir, args.runs, force)
         med = statistics.median(samples) if samples else float("nan")
         print(f"{name}: cold {cold:.3f}s warm {med:.3f}s "
               f"med{len(samples)} "
-              f"[{','.join(f'{s:.2f}' for s in sorted(samples))}]"
+              f"[{','.join(f'{s:.2f}' for s in samples)}]"
               f" ({n} rows)")
         if plan_dir:
             out = os.path.join(plan_dir, f"{name}_{suffix or 'plan'}.txt")
@@ -101,11 +70,7 @@ def main() -> None:
                     df._jdf.queryExecution(), "formatted"))
             print(f"# plan -> {out}", file=sys.stderr)
         spark.sparkContext.setJobDescription(None)
-    try:
-        la = ", ".join(f"{x:.2f}" for x in os.getloadavg())
-        print(f"# loadavg at end: {la}", file=sys.stderr)
-    except OSError:
-        pass
+    print(f"# loadavg at end: {host_loadavg()}", file=sys.stderr)
     spark.stop()
 
 

@@ -46,19 +46,13 @@ def main() -> int:
     args = ap.parse_args()
 
     from puffbird_spark import get_spark
-    from puffbird_spark.queries import QUERIES
+    from puffbird_spark.queries import QUERIES, window_names
     from puffbird_spark.telemetry import drain_kernels
 
     if args.all:
         names = [n for n in QUERIES if n not in set(args.skip)]
     elif args.window:
-        here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        path = os.path.join(
-            here, "puffbird_spark", "queries", "verify_window.txt")
-        with open(path) as fh:
-            names = [ln.strip() for ln in fh
-                     if ln.strip() and not ln.startswith("#")]
-        names = [n for n in names if n not in set(args.skip)]
+        names = [n for n in window_names() if n not in set(args.skip)]
     else:
         names = args.gates
     if not names:
